@@ -22,8 +22,15 @@ Module map (SURVEY.md section 7.2):
   textops     - language-id / quality / token-count / fingerprints
   dedup       - exact, minhash-LSH, simhash, ngram-jaccard dedup
   similarity  - embedding cosine top-k (brute force + LSH-bucketed)
+  zipcache    - stat-keyed zipimporter cache refresh for Python workers
 """
+
+from . import zipcache as _zipcache
 
 K1 = 1.2
 B = 0.75
 TOP_K = 100  # reference: LuceneQueryBuilder.java:163,186 (search(query, 100))
+
+# a no-op on the driver; inside a Python task, stops PySpark's per-task
+# importlib.invalidate_caches() from re-reading pyspark.zip (zipcache doc)
+_zipcache.install_in_worker()

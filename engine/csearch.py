@@ -57,7 +57,7 @@ from pyspark.sql.window import Window
 
 from . import TOP_K
 from .codec import decode_blocked, tf_part
-from .localrel import local_df
+from .localrel import in_filter, local_df
 from .search import idf_expr
 
 SCORE_ROWS = StructType(
@@ -1074,7 +1074,7 @@ def _pb_pruned_postings(index: dict, terms: list[str]) -> DataFrame:
     from .xxh import spark_xxhash64_str
 
     pbs = sorted({spark_xxhash64_str(t) % pb_mod for t in terms})
-    return posts.where(F.col("pb").isin(pbs))
+    return posts.where(in_filter("pb", pbs))
 
 
 def search_index(
@@ -1205,11 +1205,9 @@ def search_index(
     qt, terms, qt_rows = local_query_terms(spark, queries)
     _mark("local_query_terms")
     n_queries = len({r[0] for r in qt_rows})
-    empty = spark.createDataFrame(
-        [], "query_id string, doc_id long, score double, rank int"
-    )
     if not terms or n_docs == 0 or avgdl <= 0:
-        return empty
+        return spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
 
     # Batch-sharing design (scale invariant): the byte payloads are
     # NEVER joined with the query table. Each payload row is decoded
@@ -1223,7 +1221,7 @@ def search_index(
     # what a 1000-executor batch-serving job needs.
     payload = (
         _pb_pruned_postings(index, terms)
-        .where(F.col("term").isin(terms))
+        .where(in_filter("term", terms))
     )
     if prune and cache_level == "memory":
         payload = _track_persist(payload.cache())
@@ -1265,15 +1263,16 @@ def search_index(
         agg_impl = "matmul" if spread else "join"
     meta: dict = {}
     if prune:
-        if warm_ok:
-            # ADVICE-r5 #2: tolerate degenerate warm rows whose
-            # collected df/block_max came back NULL (foreign or
-            # hand-edited index) — such terms keep all blocks via the
-            # -inf threshold default below, mirroring the cold join's
-            # null tolerance
-            meta = {t: wt[t] for t in terms if t in wt
-                    and wt[t][0] is not None and wt[t][1] is not None}
+        if warm_ok and not any(
+                t in wt and None in wt[t] for t in terms):
+            meta = {t: wt[t] for t in terms if t in wt}
         else:
+            # cold, or a query term's warm row came back with a NULL
+            # df or block_max (foreign or hand-edited index): dropping
+            # that term from `meta` would drop its weight on matmul
+            # and its share of UB/negsum on the join route (unsound
+            # thresholds for the other terms), so the whole call takes
+            # the cold metadata instead; the warm persist stays.
             # Job A: the ONE per-call index-metadata aggregation
             meta = {
                 r["term"]: (r["df"], r["bmax_raw"])
@@ -1514,7 +1513,7 @@ def search_index(
         # spread ~100k rows per task, capped at the old width. A
         # single all-hot-term query (its "rare" term is still hot)
         # therefore still spreads across that term's salted chunks.
-        ph_rows = (payload.where(F.col("term").isin(rare_terms))
+        ph_rows = (payload.where(in_filter("term", rare_terms))
                    .select(*payload_cols))
         est_rows = sum(float(meta[v[1]][0]) for v in rare_pick.values())
         if spread and est_rows >= 200_000:
@@ -1628,7 +1627,7 @@ def pruning_stats(
     q = F.broadcast(qt)
     rows = (
         _pb_pruned_postings(index, terms)
-        .where(F.col("term").isin(terms)).join(q, "term")
+        .where(in_filter("term", terms)).join(q, "term")
         .withColumn("idf", idf_expr(n_docs))
         .withColumn("w", F.col("qtf") * F.col("idf"))
     ).cache()

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import _parse_datatype_string
 
 #: above this many rows the VALUES parse/plan cost outgrows the saved
@@ -48,9 +48,14 @@ def _render(v) -> str | None:
         # parses with strtod, so the bits survive
         return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
-        if "\x00" in v:
+        # a quote or backslash would need escaping, and how the parser
+        # reads a backslash depends on
+        # spark.sql.parser.escapedStringLiterals — leave those to the
+        # fallback (engine terms match [a-z0-9]+, so serving never
+        # takes it)
+        if "'" in v or "\\" in v or "\x00" in v:
             return None
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return f"'{v}'"
     return None
 
 
@@ -79,3 +84,17 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
         f"SELECT {casts} FROM (VALUES {', '.join(rendered)}) "
         f"AS t({cols})"
     )
+
+
+def in_filter(col: str, values) -> Column:
+    """``col IN (values)`` as ONE parsed expression. ``Column.isin``
+    makes one py4j round trip per literal (0.12-0.19 s for a 100-query
+    batch's ~330 terms, against ~0.02 s parsed); the optimized plan is
+    the same ``In``/``InSet`` either way. Falls back to ``isin`` when
+    a value has no literal here (see ``_render``) or `values` is empty
+    (``IN ()`` does not parse)."""
+    values = list(values)
+    lits = [_render(v) for v in values]
+    if not lits or None in lits:
+        return F.col(col).isin(values)
+    return F.expr(f"`{col}` IN ({', '.join(lits)})")

@@ -44,6 +44,37 @@ def test_term_filter_reaches_parquet_scan(spark, built):
     assert "In(term" in pushed and "spark" in pushed
 
 
+def test_serving_in_filters_plan_unchanged(spark, built):
+    """search_index builds its `term IN` and `pb IN` filters as one
+    parsed expression instead of Column.isin (one py4j call per
+    literal); for a 330-term query set the optimized plan (InSet) and
+    the scan's partition and pushed filters must be exactly isin's."""
+    from pyspark.sql import functions as F
+
+    from engine.csearch import _pb_pruned_postings
+    from engine.localrel import in_filter
+    from engine.xxh import spark_xxhash64_str
+
+    posts = built["postings"]
+    vocab = sorted(r.term for r in posts.select("term").distinct()
+                   .limit(330).collect())
+    terms = vocab + [f"zz{i}" for i in range(330 - len(vocab))]
+    pbs = sorted({spark_xxhash64_str(t) % built["pb_mod"] for t in terms})
+    old = posts.where(F.col("pb").isin(pbs)).where(F.col("term").isin(terms))
+    new = _pb_pruned_postings(built, terms).where(in_filter("term", terms))
+    qe_old, qe_new = old._jdf.queryExecution(), new._jdf.queryExecution()
+    opt = qe_new.optimizedPlan().toString()
+    assert opt == qe_old.optimizedPlan().toString()
+    assert "INSET" in opt.upper()
+    assert (qe_new.executedPlan().toString()
+            == qe_old.executedPlan().toString())
+    scan = [ln for ln in _formatted(new).splitlines()
+            if "PushedFilters" in ln or "PartitionFilters" in ln]
+    assert scan and scan == [
+        ln for ln in _formatted(old).splitlines()
+        if "PushedFilters" in ln or "PartitionFilters" in ln]
+
+
 def test_query_side_is_broadcast(spark, built):
     plan = _formatted(search_index(spark, built, queries_df(spark),
                                    k=10, prune=False))
